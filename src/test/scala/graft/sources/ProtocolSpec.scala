@@ -77,38 +77,46 @@ class ProtocolSpec extends SparkSpec {
     assert(VersionedTable.readVersion(spark, root, 1L).count() == 1L)
   }
 
-  private def injectFutureFeature(root: String, v: Long): Unit = {
+  private def injectFutureFeature(
+      root: String, v: Long, feature: String = "time-machine"): Unit = {
     val f = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(
       f"$root/v$v%08d/_protocol/features.properties")
     f.mkdirs(p.getParent)
     val out = f.create(p, true)
-    try out.write("reader=time-machine\nwriter=time-machine\n".getBytes("UTF-8"))
+    try out.write(s"reader=$feature\nwriter=$feature\n".getBytes("UTF-8"))
     finally out.close()
   }
 
-  test("the change feed is gated too: a future-feature version refuses its CDC tail") {
-    val root = freshRoot()
-    VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
-    VersionedTable.commitAppend(Seq((2L, "b")).toDF("id", "x"), root,
-      changeFeed = true) // v2 carries a feed
-    // sanity: the feed serves before the injection
-    assert(VersionedTable.readChanges(spark, root, 2L, 2L).count() == 1L)
-    // ...but the memo must not let a MUTATED version ride the old OK:
-    // simulate a future build's version by replacing v2's protocol
-    // record AND its marker (new marker file = new identity)
-    val f = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    injectFutureFeature(root, 2L)
-    val marker = new org.apache.hadoop.fs.Path(s"$root/_commits/00000002")
-    f.delete(marker, false)
-    Thread.sleep(20) // local-fs mtime is ms-resolution
-    f.create(marker, true).close()
-    val err = intercept[VersionedTable.ProtocolException] {
-      VersionedTable.readChanges(spark, root, 2L, 2L).count()
+  // `routed-change-feed` marks versions whose feed sits in typed subdirs
+  // this build does not read: such a version must be refused, never
+  // served as an empty feed
+  for (feature <- Seq("time-machine", "routed-change-feed")) {
+    val suffix = if (feature == "time-machine") "" else s" ($feature)"
+    test("the change feed is gated too: a future-feature version refuses " +
+        "its CDC tail" + suffix) {
+      val root = freshRoot()
+      VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
+      VersionedTable.commitAppend(Seq((2L, "b")).toDF("id", "x"), root,
+        changeFeed = true) // v2 carries a feed
+      // sanity: the feed serves before the injection
+      assert(VersionedTable.readChanges(spark, root, 2L, 2L).count() == 1L)
+      // ...but the memo must not let a MUTATED version ride the old OK:
+      // simulate a future build's version by replacing v2's protocol
+      // record AND its marker (new marker file = new identity)
+      val f = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      injectFutureFeature(root, 2L, feature)
+      val marker = new org.apache.hadoop.fs.Path(s"$root/_commits/00000002")
+      f.delete(marker, false)
+      Thread.sleep(20) // local-fs mtime is ms-resolution
+      f.create(marker, true).close()
+      val err = intercept[VersionedTable.ProtocolException] {
+        VersionedTable.readChanges(spark, root, 2L, 2L).count()
+      }
+      assert(err.getMessage.contains(feature))
     }
-    assert(err.getMessage.contains("time-machine"))
   }
 
   test("a recreated table at the same root pays a fresh protocol probe (no stale memo OK)") {
